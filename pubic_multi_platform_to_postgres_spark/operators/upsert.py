@@ -32,6 +32,7 @@ rewrites partitions it touches.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import threading
@@ -40,6 +41,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # One lock per sink path: Pipeline.run syncs streams on a thread pool, and two
 # specs whose transforms emit the same output table would otherwise interleave
@@ -54,6 +56,37 @@ def _path_lock(path: Path) -> threading.Lock:
     key = str(Path(path).resolve())
     with _PATH_LOCKS_GUARD:
         return _PATH_LOCKS.setdefault(key, threading.Lock())
+
+
+# footer key under which Spark's parquet writer records the row schema
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(path: Path) -> StructType | None:
+    """The schema Spark's schema inference would give the unpartitioned
+    parquet table at ``path``, read on the driver from one part file's
+    footer (Spark's own row-metadata key) instead of by an inference job.
+
+    Inference without ``mergeSchema`` also reads a single footer and
+    prefers this key, so the two agree whenever every part file carries
+    the same schema — true of a table written by one job, as every sink
+    write is. ``None`` (caller falls back to inference) for a directory
+    holding subdirectories (partition columns come from their names), a
+    part file without the key, or any read error. Nullability needs no
+    care: a file source reads every column as nullable, given schema or
+    inferred.
+    """
+    try:
+        import pyarrow.parquet as pq
+
+        entries = [e for e in os.scandir(path) if not e.name.startswith(("_", "."))]
+        part = next((e.path for e in entries if e.name.endswith(".parquet")), None)
+        if part is None or any(e.is_dir() for e in entries):
+            return None
+        blob = pq.read_metadata(part).metadata.get(SPARK_ROW_METADATA)
+        return None if blob is None else StructType.fromJson(json.loads(blob))
+    except Exception:  # noqa: BLE001 — unreadable footer == infer instead
+        return None
 
 
 def dedup_latest(
@@ -156,9 +189,15 @@ class ParquetUpsertSink:
         return self.path.with_name(f"_stats_{self.path.name}_clonehist")
 
     def read(self) -> DataFrame | None:
+        """The landed table, or ``None`` before the first write. An
+        unpartitioned table opens with its footer schema and launches no
+        Spark job; a partitioned one (or a footer without Spark's schema
+        key) pays the inference job."""
         if not self.path.exists():
             return None
-        return self.spark.read.parquet(str(self.path))
+        schema = None if self.partition_by else footer_schema(self.path)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(str(self.path))
 
     def write(self, batch: DataFrame) -> None:
         # Serialize the whole read→merge→swap per sink path: concurrent

@@ -17,15 +17,17 @@ Reproduces (SURVEY.md §2.6, §3.1):
   ``max(date_key, old)`` for analytics-style streams.
 
 Extraction itself is driver-side (REST cursors are sequential; see
-``sources/rest.py``); rows land in a DataFrame once per stream and every
-transform from there on is columnar. At 100 TB the REST path is never the
-hot path — file/lake sources are — but the orchestration contract
-(bookmarks, upsert idempotency, isolation) is identical for both.
+``sources/rest.py``); rows are staged once per stream as JSON lines under
+``<sink_root>/_staging/<pipeline>/`` and every transform from there on is
+columnar. At 100 TB the REST path is never the hot path — file/lake
+sources are — but the orchestration contract (bookmarks, upsert
+idempotency, isolation) is identical for both.
 """
 
 from __future__ import annotations
 
 import json
+import shutil
 import time
 from collections.abc import Callable, Iterable, Iterator
 from concurrent.futures import ThreadPoolExecutor
@@ -86,18 +88,32 @@ class SyncReport:
         return self.error is None
 
 
-def rows_to_df(spark: SparkSession, rows: list[Row], stream: Stream) -> DataFrame:
+def rows_to_df(
+    spark: SparkSession, rows: list[Row], stream: Stream, staging: Path
+) -> DataFrame:
     """Raw JSON rows → DataFrame.
 
-    Non-empty batches go through ``spark.read.json`` so nested objects
-    arrive as structs/arrays ready for the columnar flatten/unnest
-    operators; empty batches return an empty frame with the declared
-    stream schema (so downstream projection still resolves).
+    Non-empty batches are written as JSON lines to ``staging`` and parsed
+    by ``spark.read.json`` so nested objects arrive as structs/arrays ready
+    for the columnar flatten/unnest operators. Same datasource and schema
+    inference as parsing an RDD of strings, but every scan of the batch is
+    a JVM file scan instead of a Python worker feeding the driver's list
+    back in. An object or array that inference widens to a string keeps
+    its staged text (``spark.sql.json.enableExactStringParsing`` applies to
+    byte input only) where the RDD parse re-serialized it; the lines are
+    written compact and unescaped (UTF-8, not ``\\uXXXX``) so that text
+    matches the re-serialized form. The frame reads ``staging`` lazily: the
+    caller deletes the file once every consumer has run. Empty batches
+    return an empty frame with the declared stream schema (so downstream
+    projection still resolves) and write nothing.
     """
     if not rows:
         return spark.createDataFrame([], stream.schema)
-    rdd = spark.sparkContext.parallelize([json.dumps(r) for r in rows])
-    return spark.read.json(rdd)
+    staging.parent.mkdir(parents=True, exist_ok=True)
+    with open(staging, "w", encoding="utf-8") as fh:
+        for r in rows:
+            fh.write(json.dumps(r, separators=(",", ":"), ensure_ascii=False) + "\n")
+    return spark.read.json(str(staging))
 
 
 class Pipeline:
@@ -116,6 +132,8 @@ class Pipeline:
         self.specs = specs
         self.sink_root = Path(sink_root)
         self.state_path = Path(state_path) if state_path else self.sink_root / f"state_{name}.json"
+        # this pipeline's raw-batch staging files (see rows_to_df)
+        self.staging_dir = self.sink_root / "_staging" / name
 
     # -- one stream ---------------------------------------------------------
 
@@ -137,89 +155,18 @@ class Pipeline:
             bookmarks.get(name) if spec.bookmark_mode and not full_sync else None
         )
 
-        rows = list(spec.extract(bookmark))
-        raw = rows_to_df(spark, rows, spec.stream)
-
-        outputs = spec.transform(raw) if spec.transform else {name: raw}
-        for table, df in outputs.items():
-            stream = self.catalog.get(table) if table in self.catalog else spec.stream
-            if spec.client_filter and stream.replication_key in df.columns:
-                df = filter_newer(df, stream.replication_key, bookmark)
-            # The batch lineage (JSON parse → flatten/unnest → filter) is
-            # consumed up to three times below (quarantine probe, sink
-            # merge, row-count report); cache it once — a sync batch is
-            # bounded by the extraction page budget, never corpus-sized.
-            df = cached = df.persist()
-            # try/finally opens IMMEDIATELY after persist(): the
-            # quarantine probe and typed projection below can throw
-            # (caught per-stream by the runner, which keeps going), and
-            # an unpersist scoped only around the sink write would leak
-            # the cached batch for the rest of the application
-            # (ADVICE r7).
-            try:
-                # Typed schema projection (P4): land EXACTLY the declared
-                # catalog schema — every declared column, cast to its declared
-                # type, missing ones as typed NULLs. The raw parse is
-                # inference-based (transforms consume undeclared nested
-                # fields, so the declared post-flatten schema can't be applied
-                # at read.json time), and inferred types drift run-to-run
-                # (all-null field, numeric-looking strings); casting here pins
-                # the landed types so the upsert sink's unionByName never sees
-                # two cycles disagree.
-                #
-                # Dead-letter contract: a row whose non-null value fails its
-                # declared cast (try_cast → NULL) goes to _quarantine/<table>
-                # as raw JSON instead of crashing the sync (ANSI cast throws)
-                # or silently nulling the value — the loader's skip-and-log
-                # behavior, but with the rejects queryable.
-                present = [c for c in stream.columns() if c in df.columns]
-                if present:
-                    bad = F.lit(False)
-                    for f in stream.schema.fields:
-                        # full dataType equality, not class identity: a
-                        # same-class mismatch (decimal precision drift,
-                        # struct/array element types) must also route through
-                        # the quarantine check or the try_cast projection
-                        # below silently nulls it
-                        if f.name in df.columns and df.schema[f.name].dataType != f.dataType:
-                            src = F.col(f.name)
-                            bad = bad | (src.isNotNull() & src.try_cast(f.dataType).isNull())
-                    rejects = df.filter(bad)
-                    n_bad = rejects.count()
-                    if n_bad:
-                        (
-                            rejects.select(
-                                F.to_json(F.struct(*df.columns)).alias("raw"),
-                                F.lit(table).alias("_table"),
-                                F.lit(format_date(run_start)).alias("_run_start"),
-                            )
-                            .write.mode("append")
-                            .parquet(str(self.sink_root / "_quarantine" / table))
-                        )
-                        report.quarantined[table] = n_bad
-                        df = df.filter(~bad)
-                    df = df.select(*[
-                        (F.col(f.name).try_cast(f.dataType) if f.name in df.columns
-                         else F.lit(None).cast(f.dataType)).alias(f.name)
-                        for f in stream.schema.fields
-                    ])
-                keys = stream.key_properties or stream.columns()[:1]
-                # stat columns pass through UNCONDITIONALLY (ADVICE
-                # r14): the sink's own fold handles an absent column —
-                # a column-less batch still folds typed NULLs via the
-                # evolved merge, so the meta stamp stays fresh instead
-                # of forcing a full re-bootstrap scan next landing
-                sink = ParquetUpsertSink(
-                    spark, self.sink_root / table, keys,
-                    order_col=stream.replication_key
-                    if stream.replication_key in df.columns else None,
-                    clone_stat_col=spec.clone_stat_col,
-                    key_stat_cols=spec.key_stat_cols,
-                )
-                sink.write(df)
-                report.tables[table] = df.count()
-            finally:
-                cached.unpersist()
+        staging = self.staging_dir / f"{name}.jsonl"
+        try:
+            rows = list(spec.extract(bookmark))
+            raw = rows_to_df(spark, rows, spec.stream, staging)
+            outputs = spec.transform(raw) if spec.transform else {name: raw}
+            for table, df in outputs.items():
+                n, n_bad = self._land_table(spark, spec, table, df, bookmark, run_start)
+                report.tables[table] = n - n_bad
+                if n_bad:
+                    report.quarantined[table] = n_bad
+        finally:
+            staging.unlink(missing_ok=True)
 
         if spec.bookmark_mode == "run_start":
             report.bookmark = format_date(run_start)
@@ -229,6 +176,95 @@ class Pipeline:
             old = None if full_sync else bookmarks.get(name)
             report.bookmark = max(observed + ([old] if old else [])) if (observed or old) else None
         return report
+
+    def _land_table(
+        self,
+        spark: SparkSession,
+        spec: StreamSpec,
+        table: str,
+        df: DataFrame,
+        bookmark: str | None,
+        run_start: datetime,
+    ) -> tuple[int, int]:
+        """Land one output table of a stream; returns ``(rows in the
+        batch, rows quarantined)``."""
+        stream = self.catalog.get(table) if table in self.catalog else spec.stream
+        if spec.client_filter and stream.replication_key in df.columns:
+            df = filter_newer(df, stream.replication_key, bookmark)
+        # The batch lineage (staged JSON scan → flatten/unnest → filter)
+        # has two consumers below: one aggregate that counts the batch and
+        # its quarantine rejects together, and the sink merge (plus the
+        # reject write when there are rejects). Cache it once — a sync
+        # batch is bounded by the extraction page budget, never
+        # corpus-sized.
+        df = cached = df.persist()
+        # try/finally opens IMMEDIATELY after persist(): the quarantine
+        # probe and typed projection below can throw (caught per-stream by
+        # the runner, which keeps going), and an unpersist scoped only
+        # around the sink write would leak the cached batch for the rest
+        # of the application (ADVICE r7).
+        try:
+            # Typed schema projection (P4): land EXACTLY the declared
+            # catalog schema — every declared column, cast to its declared
+            # type, missing ones as typed NULLs. The raw parse is
+            # inference-based (transforms consume undeclared nested
+            # fields, so the declared post-flatten schema can't be applied
+            # at read.json time), and inferred types drift run-to-run
+            # (all-null field, numeric-looking strings); casting here pins
+            # the landed types so the upsert sink's unionByName never sees
+            # two cycles disagree.
+            #
+            # Dead-letter contract: a row whose non-null value fails its
+            # declared cast (try_cast → NULL) goes to _quarantine/<table>
+            # as raw JSON instead of crashing the sync (ANSI cast throws)
+            # or silently nulling the value — the loader's skip-and-log
+            # behavior, but with the rejects queryable.
+            present = [c for c in stream.columns() if c in df.columns]
+            bad = F.lit(False)
+            for f in stream.schema.fields:
+                # full dataType equality, not class identity: a same-class
+                # mismatch (decimal precision drift, struct/array element
+                # types) must also route through the quarantine check or
+                # the try_cast projection below silently nulls it
+                if f.name in df.columns and df.schema[f.name].dataType != f.dataType:
+                    src = F.col(f.name)
+                    bad = bad | (src.isNotNull() & src.try_cast(f.dataType).isNull())
+            # one job counts the batch and its rejects (and fills the cache)
+            n, n_bad = df.agg(F.count(F.lit(1)), F.count_if(bad)).first()
+            if n_bad:
+                (
+                    df.filter(bad).select(
+                        F.to_json(F.struct(*df.columns)).alias("raw"),
+                        F.lit(table).alias("_table"),
+                        F.lit(format_date(run_start)).alias("_run_start"),
+                    )
+                    .write.mode("append")
+                    .parquet(str(self.sink_root / "_quarantine" / table))
+                )
+                df = df.filter(~bad)
+            if present:
+                df = df.select(*[
+                    (F.col(f.name).try_cast(f.dataType) if f.name in df.columns
+                     else F.lit(None).cast(f.dataType)).alias(f.name)
+                    for f in stream.schema.fields
+                ])
+            keys = stream.key_properties or stream.columns()[:1]
+            # stat columns pass through UNCONDITIONALLY (ADVICE
+            # r14): the sink's own fold handles an absent column —
+            # a column-less batch still folds typed NULLs via the
+            # evolved merge, so the meta stamp stays fresh instead
+            # of forcing a full re-bootstrap scan next landing
+            sink = ParquetUpsertSink(
+                spark, self.sink_root / table, keys,
+                order_col=stream.replication_key
+                if stream.replication_key in df.columns else None,
+                clone_stat_col=spec.clone_stat_col,
+                key_stat_cols=spec.key_stat_cols,
+            )
+            sink.write(df)
+            return n, n_bad
+        finally:
+            cached.unpersist()
 
     # -- one pipeline run (O2 concurrency + O6 isolation) -------------------
 
@@ -245,6 +281,8 @@ class Pipeline:
         Idempotent by the sink's PK upsert."""
         bookmarks = BookmarkManager.load(self.state_path)
         run_start = datetime.now(timezone.utc)
+        # staging files a killed run left behind (this pipeline's only)
+        shutil.rmtree(self.staging_dir, ignore_errors=True)
 
         def _one(spec: StreamSpec) -> SyncReport:
             try:

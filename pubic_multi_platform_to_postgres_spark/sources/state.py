@@ -25,6 +25,7 @@ Reference semantics (SURVEY.md §2.7):
 from __future__ import annotations
 
 import json
+import os
 import re
 from datetime import datetime, timezone
 from pathlib import Path
@@ -99,9 +100,14 @@ class BookmarkManager:
         return cls({k: v for k, v in value.items() if isinstance(v, str)})
 
     def save(self, path: str | Path) -> None:
-        Path(path).write_text(
+        """Write ``<path>.tmp``, then rename it over ``path``: a save that
+        dies partway leaves the previous state file whole."""
+        p = Path(path)
+        tmp = p.with_name(p.name + ".tmp")
+        tmp.write_text(
             json.dumps({"type": "STATE", "value": dict(self._state)}, indent=2)
         )
+        os.replace(tmp, p)
 
     # -- bookmark reads/writes (§2.7) --------------------------------------
 

@@ -63,6 +63,31 @@ def test_sentinel_and_roundtrip(tmp_path):
     assert BookmarkManager.load(tmp_path / "missing.json").as_dict() == {}
 
 
+def test_bookmark_save_leaves_previous_state_when_write_dies(tmp_path, monkeypatch):
+    """A save that dies partway through its write (disk full, kill)
+    must leave the previous state file byte-identical and loadable: the
+    write goes to ``<path>.tmp`` and only a whole file is renamed in."""
+    import pathlib
+
+    path = tmp_path / "state.json"
+    BookmarkManager({"tasks": "2026-01-01T00:00:00.000Z"}).save(path)
+    before = path.read_bytes()
+
+    real_write_text = pathlib.Path.write_text
+
+    def dies_partway(self, data, *args, **kwargs):
+        real_write_text(self, data[: len(data) // 2], *args, **kwargs)
+        raise OSError("No space left on device")
+
+    monkeypatch.setattr(pathlib.Path, "write_text", dies_partway)
+    with pytest.raises(OSError, match="No space left"):
+        BookmarkManager({"tasks": "2027-01-01T00:00:00.000Z"}).save(path)
+    monkeypatch.undo()
+
+    assert path.read_bytes() == before
+    assert BookmarkManager.load(path).get("tasks") == "2026-01-01T00:00:00.000Z"
+
+
 def test_merge_after_gather():
     bm = BookmarkManager({"a": "2026-01-01T00:00:00.000Z"})
     bm.merge({"b": "2026-02-01T00:00:00.000Z", "a": "2026-03-01T00:00:00.000Z"})
@@ -408,6 +433,75 @@ def test_upsert_schema_evolution_union_semantics(spark, tmp_path):
     rows = {r["id"]: (r["v"], r["extra"]) for r in
             spark.read.parquet(str(tmp_path / "t")).collect()}
     assert rows == {"a": (1, None), "b": (2, "x"), "c": (None, "y")}
+
+
+def _last_job_id(spark) -> int:
+    # job ids come from one counter per SparkContext, whichever thread
+    # submits the job
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    return max(ids) if ids else -1
+
+
+def _write_evolved(sink, spark):
+    sink.write(spark.createDataFrame([("a", 1)], "id string, v int"))
+    sink.write(spark.createDataFrame([("b", 2, "x")], "id string, v int, extra string"))
+
+
+@pytest.mark.parametrize("shape", ["nested", "timestamp_decimal", "evolved"])
+def test_sink_read_opens_from_footer_schema_without_jobs(spark, tmp_path, shape):
+    """An unpartitioned table opens with the schema Spark recorded in a
+    part file's footer: the same schema inference gives, and no Spark
+    job (inference costs one per open, paid on every landing)."""
+    sink = ParquetUpsertSink(spark, tmp_path / "t", keys=["id"])
+    if shape == "nested":
+        sink.write(spark.createDataFrame(
+            [("a", (1, [("x", [1.5])]), {"k": [2]})],
+            "id string, s struct<n:int, items:array<struct<c:string, w:array<double>>>>,"
+            " m map<string, array<int>>",
+        ))
+    elif shape == "timestamp_decimal":
+        sink.write(spark.createDataFrame(
+            [("a", dt.datetime(2026, 5, 1, 12, 0), dt.datetime(2026, 5, 1, 12, 0),
+              dt.date(2026, 5, 1), __import__("decimal").Decimal("12.345"))],
+            "id string, ts timestamp, ntz timestamp_ntz, d date, amount decimal(18,3)",
+        ))
+    else:
+        _write_evolved(sink, spark)
+
+    start = _last_job_id(spark)
+    schema = sink.read().schema
+    assert _last_job_id(spark) == start, "opening the table launched a Spark job"
+    assert schema == spark.read.parquet(str(tmp_path / "t")).schema
+    if shape == "evolved":
+        assert schema.fieldNames() == ["id", "v", "extra"]
+        rows = {r["id"]: (r["v"], r["extra"]) for r in sink.read().collect()}
+        assert rows == {"a": (1, None), "b": (2, "x")}
+
+
+def test_sink_read_falls_back_to_inference_without_footer_schema(spark, tmp_path):
+    """A partitioned table (partition columns live in directory names)
+    and a part file written without Spark's schema key both open through
+    inference and read exactly what ``spark.read.parquet`` reads."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pubic_multi_platform_to_postgres_spark.operators.upsert import footer_schema
+
+    part = ParquetUpsertSink(spark, tmp_path / "p", keys=["id"], partition_by=["region"])
+    part.write(spark.createDataFrame([("a", 1, "eu"), ("b", 2, "us")],
+                                     "id string, v int, region string"))
+    part.write(spark.createDataFrame([("c", 3, "y", "eu")],
+                                     "id string, v int, extra string, region string"))
+    assert footer_schema(tmp_path / "p") is None
+    assert part.read().schema == spark.read.parquet(str(tmp_path / "p")).schema
+    assert sorted(r["id"] for r in part.read().collect()) == ["a", "b", "c"]
+
+    (tmp_path / "foreign").mkdir()
+    pq.write_table(pa.table({"id": ["a"], "n": [1]}), tmp_path / "foreign" / "part-0.parquet")
+    assert footer_schema(tmp_path / "foreign") is None
+    foreign = ParquetUpsertSink(spark, tmp_path / "foreign", keys=["id"])
+    assert foreign.read().schema == spark.read.parquet(str(tmp_path / "foreign")).schema
+    assert [tuple(r) for r in foreign.read().collect()] == [("a", 1)]
 
 
 def test_versioned_sink_time_travel_and_vacuum(spark, tmp_path):

@@ -6,7 +6,7 @@ bookmark contract depends on (SURVEY.md §5 test strategy #2/#3)."""
 from __future__ import annotations
 
 import json
-from datetime import datetime
+from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +18,7 @@ from pubic_multi_platform_to_postgres_spark.sources.auth import OAuth2RefreshAut
 from pubic_multi_platform_to_postgres_spark.sources.pipeline import (
     Pipeline,
     StreamSpec,
+    rows_to_df,
     run_sequence,
 )
 from pubic_multi_platform_to_postgres_spark.sources.rest import (
@@ -635,24 +636,29 @@ def test_pipeline_no_cache_leak_when_probe_fails(spark, tmp_path):
     still be unpersisted or it leaks for the rest of the application.
     A transform whose execution raises during the probe (type mismatch
     forces the probe to run the plan) must leave ZERO persistent RDDs
-    behind."""
+    behind. Checked on a one-table stream (``tasks``) and on one table
+    of a two-table stream (``contacts_profiles``, landing after
+    ``contacts``): the stream fails, its bookmark stays put, and a
+    clean rerun lands both of its tables exactly."""
     import dataclasses
 
     extracted = {"tasks": _raw_tasks(1), "contacts": _raw_contacts()}
     pipe = _make_pipeline(spark, tmp_path, extracted)
+    lake = tmp_path / "lake"
 
     @F.udf("int")
     def boom(s):
         raise RuntimeError("probe boom")
 
-    orig = pipe.specs[0]
+    def breaking(spec, table, column):
+        def bad_transform(raw):
+            out = dict(spec.transform(raw))
+            # int column vs declared string type -> the quarantine probe
+            # must execute the plan -> the UDF raises mid-probe
+            out[table] = out[table].withColumn(column, boom(F.col(column)))
+            return out
 
-    def bad_transform(raw):
-        out = dict(orig.transform(raw))
-        # int column vs declared string type -> the quarantine probe
-        # must execute the plan -> the UDF raises mid-probe
-        out["tasks"] = out["tasks"].withColumn("title", boom(F.col("title")))
-        return out
+        return dataclasses.replace(spec, transform=bad_transform)
 
     def persistent_ids():
         # DELTA check, not absolute: the shared test session carries
@@ -661,13 +667,156 @@ def test_pipeline_no_cache_leak_when_probe_fails(spark, tmp_path):
         m = spark.sparkContext._jsc.getPersistentRDDs()
         return set(m.keySet().toArray())
 
+    def bookmarks():
+        return json.loads((lake / "state_wrike.json").read_text())["value"]
+
+    tasks_spec, contacts_spec = pipe.specs
     before = persistent_ids()
-    pipe.specs[0] = dataclasses.replace(orig, transform=bad_transform)
+    pipe.specs = [breaking(tasks_spec, "tasks", "title"), contacts_spec]
     reports = {r.stream: r for r in pipe.run(spark)}
     assert not reports["tasks"].ok
     assert reports["contacts"].ok          # O6 isolation still holds
+    assert "tasks" not in bookmarks()
+    contacts_bookmark = bookmarks()["contacts"]
+
+    pipe.specs = [tasks_spec, breaking(contacts_spec, "contacts_profiles", "email")]
+    reports = {r.stream: r for r in pipe.run(spark)}
+    assert reports["tasks"].ok
+    assert not reports["contacts"].ok and "probe boom" in reports["contacts"].error
+    assert bookmarks()["contacts"] == contacts_bookmark  # not advanced
     leaked = persistent_ids() - before
     assert not leaked, f"cached RDD(s) {leaked} leaked past the finally"
+
+    pipe.specs = [tasks_spec, contacts_spec]
+    reports = {r.stream: r for r in pipe.run(spark)}
+    assert reports["contacts"].ok
+    assert reports["contacts"].tables == {"contacts": 2, "contacts_profiles": 2}
+    assert bookmarks()["contacts"] > contacts_bookmark
+    contacts = {tuple(r) for r in spark.read.parquet(str(lake / "contacts")).collect()}
+    assert contacts == {("c1", "Ada"), ("c2", "Grace")}
+    profiles = {(r["id"], r["parent_id"], r["email"])
+                for r in spark.read.parquet(str(lake / "contacts_profiles")).collect()}
+    assert profiles == {("c1_A1", "c1", "ada@a1.example"), ("c1_A2", "c1", "ada@a2.example")}
+
+
+def _staged(lake, pipeline="wrike"):
+    return sorted(p.name for p in (lake / "_staging" / pipeline).glob("*"))
+
+
+def test_rows_to_df_is_a_scan_of_the_staging_file(spark, tmp_path):
+    """Extracted rows are parsed by a JVM file scan of one JSON-lines
+    file, not by a Python-fed RDD; an empty batch stages nothing."""
+    from urllib.parse import urlparse
+
+    stream = _make_pipeline(spark, tmp_path, {}).catalog.get("contacts")
+    staging = tmp_path / "_staging" / "wrike" / "contacts.jsonl"
+    df = rows_to_df(spark, _raw_contacts(), stream, staging)
+    assert [urlparse(f).path for f in df.inputFiles()] == [str(staging)]
+    assert sorted(r["id"] for r in df.collect()) == ["c1", "c2"]
+    assert df.schema["profiles"].dataType.elementType.fieldNames() == ["accountId", "email"]
+
+    empty = tmp_path / "_staging" / "wrike" / "empty.jsonl"
+    assert rows_to_df(spark, [], stream, empty).count() == 0
+    assert not empty.exists()
+
+
+def test_widened_object_lands_as_unescaped_json_text(spark, tmp_path):
+    """A declared-string column that gets an object in one row and a
+    string in another is inferred as a string; the object lands as its
+    compact JSON text with non-ASCII characters kept as they are, the
+    same text the RDD parse's re-serialization produced."""
+    name = {"given": "José", "marks": ["ü", 1.5, 10000000000, None, True]}
+    rows = [
+        {"id": "c1", "firstName": name},
+        {"id": "c2", "firstName": "Zoë"},
+    ]
+    pipe = _make_pipeline(spark, tmp_path, {"tasks": [], "contacts": rows})
+    assert all(r.ok for r in pipe.run(spark))
+
+    landed = {r["id"]: r["firstName"]
+              for r in spark.read.parquet(str(tmp_path / "lake" / "contacts")).collect()}
+    assert landed == {
+        "c1": '{"given":"José","marks":["ü",1.5,10000000000,null,true]}',
+        "c2": "Zoë",
+    }
+    rdd_parse = spark.read.json(spark.sparkContext.parallelize([json.dumps(r) for r in rows]))
+    assert landed == {r["id"]: r["firstName"] for r in rdd_parse.collect()}
+
+
+def test_sync_stream_removes_its_staging_file(spark, tmp_path):
+    """The staging file lives exactly as long as the stream's sync: gone
+    after a successful landing and after a transform that raises."""
+    import dataclasses
+
+    from pubic_multi_platform_to_postgres_spark.sources.state import BookmarkManager
+
+    pipe = _make_pipeline(spark, tmp_path, {"contacts": _raw_contacts()})
+    lake = tmp_path / "lake"
+    spec = pipe.specs[1]
+    run_start = datetime.now(timezone.utc)
+    seen = []
+
+    def watching(raw):
+        seen.append(_staged(lake))
+        return spec.transform(raw)
+
+    report = pipe.sync_stream(spark, dataclasses.replace(spec, transform=watching),
+                              BookmarkManager(), run_start)
+    assert report.ok and report.tables == {"contacts": 2, "contacts_profiles": 2}
+    assert seen[0] == ["contacts.jsonl"]  # the batch was staged while it landed
+    assert _staged(lake) == []
+
+    def raising(raw):
+        seen.append(_staged(lake))
+        raise RuntimeError("transform boom")
+
+    with pytest.raises(RuntimeError, match="transform boom"):
+        pipe.sync_stream(spark, dataclasses.replace(spec, transform=raising),
+                         BookmarkManager(), run_start)
+    assert seen[1] == ["contacts.jsonl"]
+    assert _staged(lake) == []
+
+
+def test_run_removes_own_stale_staging_files_only(spark, tmp_path):
+    """A killed run leaves its staging files behind; the pipeline's next
+    run deletes its own and leaves another pipeline's alone."""
+    lake = tmp_path / "lake"
+    for pipeline, name in (("wrike", "tasks.jsonl"), ("hubspot", "deals.jsonl")):
+        (lake / "_staging" / pipeline).mkdir(parents=True)
+        (lake / "_staging" / pipeline / name).write_text('{"id": "x"}\n')
+
+    pipe = _make_pipeline(spark, tmp_path, {"tasks": _raw_tasks(1), "contacts": _raw_contacts()})
+    assert all(r.ok for r in pipe.run(spark))
+    assert _staged(lake) == []
+    assert _staged(lake, pipeline="hubspot") == ["deals.jsonl"]
+
+
+def test_pipeline_run_job_budget(spark, tmp_path):
+    """Pins the Spark jobs one incremental ``Pipeline.run`` launches
+    (two streams, three tables, every table already landed): 24 before
+    the landing path was reworked, 17 after it (a JSON parse of a staged
+    file instead of a Python-fed RDD, one aggregate counting a table's
+    batch and its rejects instead of a reject count plus a post-write
+    recount, and a job-free table open from the footer schema). A
+    re-added recount or inference job fails here."""
+    extracted = {"tasks": _raw_tasks(), "contacts": _raw_contacts()}
+    pipe = _make_pipeline(spark, tmp_path, extracted)
+    pipe.run(spark)
+    extracted["tasks"] = _raw_tasks(3, updated="2031-01-01T00:00:00.000Z")
+
+    def last_job_id():
+        # one job-id counter per SparkContext: the delta counts the jobs
+        # of the pipeline's worker threads too
+        ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+        return max(ids) if ids else -1
+
+    start = last_job_id()
+    reports = pipe.run(spark)
+    jobs = last_job_id() - start
+    assert all(r.ok for r in reports)
+    assert {t: n for r in reports for t, n in r.tables.items()} == {
+        "tasks": 3, "contacts": 2, "contacts_profiles": 2}
+    assert jobs <= 17, f"{jobs} Spark jobs for one incremental run (budget 17)"
 
 
 def test_run_sequence_cycles_and_after_cycle(spark, tmp_path):
